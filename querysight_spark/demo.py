@@ -21,7 +21,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from querysight_spark.schemas import (
+    DBT_EDGES_SCHEMA,
+    DBT_MODEL_MAP_SCHEMA,
+    DBT_SOURCES_SCHEMA,
+)
 from querysight_spark.sources.catalog import load_table
+from querysight_spark.sources.dbt_catalog import local_frame
 
 # ---------------------------------------------------------------------------
 # Spark side: DataFrame transformations
@@ -77,16 +83,12 @@ def build_model_map(spark: SparkSession) -> DataFrame:
         rows.append((f"t{i}", f"model_{i}", f"db{i % 3}", "table", 0))
         for db in range(3):
             rows.append((f"db{db}.t{i}", f"model_{i}", f"db{db}", "table", 1))
-    from querysight_spark.schemas import DBT_MODEL_MAP_SCHEMA
-
-    return spark.createDataFrame(rows, schema=DBT_MODEL_MAP_SCHEMA)
+    return local_frame(spark, rows, DBT_MODEL_MAP_SCHEMA)
 
 
 def build_sources_dim(spark: SparkSession) -> DataFrame:
     """dbt sources analog: t8/t9 are declared sources (matched by the C5
     suffix rule), t10/t11 stay truly uncovered."""
-    from querysight_spark.schemas import DBT_SOURCES_SCHEMA
-
     rows = [
         ("raw.t8", "warehouse.db0.t8"),
         ("raw.t8b", "warehouse.db1.t8"),
@@ -95,15 +97,13 @@ def build_sources_dim(spark: SparkSession) -> DataFrame:
         ("raw.t9b", "db1.t9"),
         ("raw.t9c", "db2.t9"),
     ]
-    return spark.createDataFrame(rows, schema=DBT_SOURCES_SCHEMA)
+    return local_frame(spark, rows, DBT_SOURCES_SCHEMA)
 
 
 def build_edges(spark: SparkSession) -> DataFrame:
     """dbt DAG analog: model_i depends on model_{i-1} (chain of depth 8)."""
-    from querysight_spark.schemas import DBT_EDGES_SCHEMA
-
     rows = [(f"model_{i}", f"model_{i - 1}") for i in range(1, 8)]
-    return spark.createDataFrame(rows, schema=DBT_EDGES_SCHEMA)
+    return local_frame(spark, rows, DBT_EDGES_SCHEMA)
 
 
 def build_raw_query_log(spark: SparkSession, sf_dir: str) -> DataFrame:

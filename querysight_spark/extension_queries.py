@@ -235,7 +235,7 @@ def dd06(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = embedding_cosine_duplicates_lsh(
         _vecs_aug(spark, sf_dir),
         threshold=0.95,
-        dim=len(_query_vec(spark, sf_dir)),
+        dim=_vec_dim(sf_dir),
     )
     return out.orderBy("vec_a", "vec_b")
 
@@ -464,6 +464,27 @@ def dd05(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- similarity search ------------------------------------------------------
+
+
+def _vec_dim(sf_dir: str) -> int | None:
+    """Embedding length of the first stored row, read driver-side through
+    pyarrow (no Spark job, and no dependence on any particular vec_id
+    being present). None when the table is empty, the first embedding is
+    null, or pyarrow cannot read the layout — the caller's operator then
+    sniffs the length itself."""
+    import os
+
+    import pyarrow as _pa
+    import pyarrow.dataset as _ds
+
+    path = os.path.join(sf_dir, "embeddings.parquet")
+    try:
+        first = _ds.dataset(path, format="parquet").head(1, columns=["embedding"])
+    except (OSError, _pa.ArrowException):
+        return None
+    if first.num_rows == 0 or not first.column(0)[0].is_valid:
+        return None
+    return len(first.column(0)[0])
 
 
 def _query_vec(spark: SparkSession, sf_dir: str) -> list[float]:

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from querysight_spark.sources.dbt_catalog import local_frame
+
 
 def _doc_lengths(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return df.select(
@@ -515,7 +517,8 @@ def upsert_text_index(
         ).collect()[0]
         n = int(s_old.n_docs) + int(s_new.dn)
         total = _stats_total(s_old) + int(s_new.dsum or 0)
-        new_stats = spark.createDataFrame(
+        new_stats = local_frame(
+            spark,
             [(n, total / n, total)],
             "n_docs bigint, avgdl double, total_dl bigint",
         )
@@ -686,7 +689,8 @@ def delete_from_text_index(
         s_old = spark.read.parquet(f"{path}/stats").collect()[0]
         n = int(s_old.n_docs) - n_del
         total = _stats_total(s_old) - int(s_del.dsum)
-        new_stats = spark.createDataFrame(
+        new_stats = local_frame(
+            spark,
             [(n, total / n if n else 0.0, total)],
             "n_docs bigint, avgdl double, total_dl bigint",
         )

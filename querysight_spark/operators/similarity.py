@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from querysight_spark.operators.vectors import as_double as _as_double
 from querysight_spark.operators.vectors import cosine_vs_query as _cosine_vs_query
 from querysight_spark.operators.vectors import dot as _dot_dim
+from querysight_spark.sources.dbt_catalog import local_frame
 
 
 def _dot(a, b, dim=None):
@@ -413,7 +414,8 @@ def pq_topk(
     )
     ls = np.concatenate([(C * C).sum(axis=1) for C in books])
     spark = codes_df.sparkSession
-    lut = spark.createDataFrame(
+    lut = local_frame(
+        spark,
         [([float(x) for x in ld], [float(x) for x in ls])],
         "ld array<double>, ls array<double>",
     )
@@ -817,7 +819,8 @@ def ivfpq_topk(
             )
         )
     spark = codes_df.sparkSession
-    lut = spark.createDataFrame(
+    lut = local_frame(
+        spark,
         lut_rows,
         "list_id int, qc double, cc double, "
         "ld array<double>, lcd array<double>, lsq array<double>",
@@ -1526,7 +1529,7 @@ def _nsw_graph_edges(
     edges = links.unionByName(spokes)
     if ring_rows:
         edges = edges.unionByName(
-            v.sparkSession.createDataFrame(ring_rows, "node long, nbr long")
+            local_frame(v.sparkSession, ring_rows, "node long, nbr long")
         )
     sym = edges.unionByName(
         edges.select(F.col("nbr").alias("node"), F.col("node").alias("nbr"))
@@ -1785,7 +1788,7 @@ def probe_hnsw_index(
                 cur = best[0]
             else:
                 break
-    entry = spark.createDataFrame([(int(cur.node),)], "node long")
+    entry = local_frame(spark, [(int(cur.node),)], "node long")
     adj0 = adj.where(F.col("layer") == 0).select("node", "nbr")
     return _graph_beam_topk(
         adj0, vecs, query_vec, k, beam_width, max_hops, entry, id_col

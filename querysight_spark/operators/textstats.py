@@ -10,6 +10,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from querysight_spark.sources.dbt_catalog import local_frame
+
 # BPE-ish pre-tokenizer: letter runs, digit runs, single punctuation marks.
 BPE_REGEX = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
@@ -922,8 +924,8 @@ def bpe_merge_steps(
         prev.unpersist()
     words.unpersist()
     spark = df.sparkSession
-    return spark.createDataFrame(
-        merges, "step int, pair string, merged string, pair_count long"
+    return local_frame(
+        spark, merges, "step int, pair string, merged string, pair_count long"
     )
 
 

@@ -23,6 +23,11 @@ def plan_summary(df: DataFrame) -> dict:
     """Coarse physical-plan counters for assertions:
 
     - n_scans: file-source scans
+    - n_local_scans: LocalTableScan occurrences (driver-built rows held
+      in the plan; scanning or broadcasting them runs no Python worker)
+    - n_rdd_scans: Scan ExistingRDD occurrences (a checkpointed frame,
+      or ``createDataFrame`` over a Python list, whose every scan runs a
+      PythonRDD stage)
     - n_exchanges: total exchanges (shuffles + broadcasts)
     - n_shuffles / n_broadcasts: exchange kinds (shuffle = data moves
       across the cluster; broadcast = replicated small side)
@@ -64,6 +69,8 @@ def plan_summary(df: DataFrame) -> dict:
     return {
         "n_cache_refs": n_cache_refs,
         "n_scans": len(re.findall(r"FileScan|Scan parquet|Scan csv|Scan json", plan)),
+        "n_local_scans": plan.count("LocalTableScan"),
+        "n_rdd_scans": plan.count("Scan ExistingRDD"),
         "n_exchanges": plan.count("Exchange"),
         "n_broadcasts": plan.count("BroadcastExchange"),
         "n_shuffles": plan.count("Exchange") - plan.count("BroadcastExchange"),

@@ -29,6 +29,7 @@ from querysight_spark.plans.recommend import (
     with_pattern_types,
     with_table_classes,
 )
+from querysight_spark.sources.dbt_catalog import local_frame
 
 
 class Recommender(Protocol):
@@ -436,8 +437,8 @@ class LLMRecommender:
         )
         rows = [(r.pattern_id, r.normalized_query, self.complete(self._prompt(r)))
                 for r in top]
-        raw = spark.createDataFrame(
-            rows, "pattern_id string, normalized_query string, response string"
+        raw = local_frame(
+            spark, rows, "pattern_id string, normalized_query string, response string"
         )
         return parse_llm_response(raw).select(
             "pattern_id",

@@ -15,12 +15,14 @@ maxPartitionBytes-sized tasks; nothing here collects to the driver.
 from __future__ import annotations
 
 import os
+from collections import OrderedDict
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from querysight_spark.schemas import TESTDATA_TABLES
+from querysight_spark.sources.dbt_catalog import local_frame
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -30,11 +32,17 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # of driver latency per call on this host, any scale). The inferred
 # StructType is pure METADATA, so it follows the r14 manifest-cache
 # precedent: keyed on the source's identity (path + mtime_ns + size),
-# never on path alone, it invalidates the moment the file or directory
-# contents change — no result or data row is ever cached. Bounded to
-# keep a long-lived session from accumulating entries.
-_SCHEMA_CACHE: dict[tuple, object] = {}
+# never on path alone, plus the session setting that changes what is
+# inferred (nanosAsLong turns TIMESTAMP(NANOS) into a long). No result or
+# data row is ever cached. A single file is re-inferred the moment it is
+# rewritten. A directory's mtime moves only when entries are added to or
+# removed from the directory itself, so a write inside a nested partition
+# directory (dir/p=1/part-*.parquet) keeps the old key and the old schema.
+# Bounded, evicting the least recently used entry, to keep a long-lived
+# session from accumulating entries.
+_SCHEMA_CACHE: OrderedDict[tuple, object] = OrderedDict()
 _SCHEMA_CACHE_MAX = 256
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
 
 def _source_identity(path: str) -> tuple:
@@ -45,20 +53,22 @@ def _source_identity(path: str) -> tuple:
 def read_parquet_known_schema(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` that skips per-call footer-based
     schema inference after the first read of a given source identity.
-    First read infers and memoizes; any rewrite of the file/directory
-    (new mtime) re-infers. Falls back to plain inference if the path
-    cannot be stat'ed (e.g. globs)."""
+    First read infers and memoizes; a rewrite of the file, a change to
+    the directory's own entries, or a different nanosAsLong setting
+    re-infers. Falls back to plain inference if the path cannot be
+    stat'ed (e.g. globs)."""
     try:
-        key = _source_identity(path)
+        key = _source_identity(path) + (spark.conf.get(_NANOS_AS_LONG),)
     except OSError:
         return spark.read.parquet(path)
     schema = _SCHEMA_CACHE.get(key)
     if schema is None:
         df = spark.read.parquet(path)
-        if len(_SCHEMA_CACHE) >= _SCHEMA_CACHE_MAX:
-            _SCHEMA_CACHE.clear()
         _SCHEMA_CACHE[key] = df.schema
+        if len(_SCHEMA_CACHE) > _SCHEMA_CACHE_MAX:
+            _SCHEMA_CACHE.popitem(last=False)
         return df
+    _SCHEMA_CACHE.move_to_end(key)
     return spark.read.schema(schema).parquet(path)
 
 
@@ -140,4 +150,4 @@ def get_table_schema(df: DataFrame) -> DataFrame:
     ``df.schema`` into a queryable DataFrame."""
     spark = df.sparkSession
     rows = [(f.name, f.dataType.simpleString(), f.nullable) for f in df.schema.fields]
-    return spark.createDataFrame(rows, "col_name string, data_type string, nullable boolean")
+    return local_frame(spark, rows, "col_name string, data_type string, nullable boolean")

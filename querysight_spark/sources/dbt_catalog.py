@@ -7,9 +7,11 @@ declarations, ``**/*.sql`` model files, and the regex dependency scan over
 ``ref()``/``source()`` macros.
 
 These are driver-side parses by design: a dbt project is a few thousand tiny
-files — a dimension, not a fact table. The output DataFrames are built with
-``spark.createDataFrame`` and joined with explicit ``broadcast()`` hints, so
-even at 100 TB of log data the catalog never shuffles.
+files — a dimension, not a fact table. The output DataFrames are built by
+``local_frame`` from a pyarrow table, so they plan as a ``LocalRelation``
+(``LocalTableScan``): scanning or broadcasting one starts no Python worker
+and runs no scan job. They are joined with explicit ``broadcast()`` hints,
+so even at 100 TB of log data the catalog never shuffles.
 
 Lookup-key semantics (C1): the reference registers each model under several
 keys and resolves a table ref by trying exact key → bare name → schema.table
@@ -26,7 +28,10 @@ import re
 from dataclasses import dataclass, field
 from glob import glob
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from querysight_spark.schemas import (
     DBT_EDGES_SCHEMA,
@@ -47,7 +52,7 @@ _SOURCE_MACRO = re.compile(
 
 @dataclass
 class DbtCatalog:
-    """Parsed catalog: plain Python rows, ready for createDataFrame."""
+    """Parsed catalog: plain Python rows, ready for ``local_frame``."""
 
     models: list[dict] = field(default_factory=list)  # name, schema, materialized
     sources: list[tuple[str, str]] = field(default_factory=list)  # (source_ref, physical)
@@ -144,12 +149,36 @@ def parse_dbt_project(project_dir: str) -> DbtCatalog:
     return cat
 
 
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: StructType | str
+) -> DataFrame:
+    """Driver-held ``rows`` (tuples in ``schema`` field order) as a
+    DataFrame that plans as a ``LocalRelation`` / ``LocalTableScan``.
+
+    ``spark.createDataFrame(list_of_tuples)`` plans a parallelized
+    PythonRDD instead (``Scan ExistingRDD``): every scan or broadcast of
+    it runs a stage that starts Python workers, hundreds of ms of wall
+    time for a few rows. Going through a pyarrow table keeps the rows in
+    the JVM. Column types come from ``schema`` (a StructType or DDL
+    string), never from the values; a value that does not fit its type,
+    or a None in a non-nullable field, raises."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [[] for _ in schema.fields]
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema=schema)
+
+
 def catalog_frames(
     spark: SparkSession, cat: DbtCatalog
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(model_map, sources, edges) DataFrames with explicit schemas —
     empty-safe so a project with no sources still yields typed frames."""
-    model_map = spark.createDataFrame(cat.model_map_rows(), schema=DBT_MODEL_MAP_SCHEMA)
-    sources = spark.createDataFrame(cat.sources, schema=DBT_SOURCES_SCHEMA)
-    edges = spark.createDataFrame(cat.edges, schema=DBT_EDGES_SCHEMA)
+    model_map = local_frame(spark, cat.model_map_rows(), DBT_MODEL_MAP_SCHEMA)
+    sources = local_frame(spark, cat.sources, DBT_SOURCES_SCHEMA)
+    edges = local_frame(spark, cat.edges, DBT_EDGES_SCHEMA)
     return model_map, sources, edges

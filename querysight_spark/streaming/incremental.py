@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from querysight_spark.plans.patterns import aggregate_patterns, merge_patterns
 from querysight_spark.schemas import QUERY_LOG_SCHEMA
+from querysight_spark.sources.dbt_catalog import local_frame
 
 
 def stream_query_logs(
@@ -452,7 +453,8 @@ def drift_from_counts(
     from pyspark.sql import Window
 
     spark = obs_counts.sparkSession
-    ref_df = spark.createDataFrame(
+    ref_df = local_frame(
+        spark,
         [(int(b), int(c)) for b, c in sorted(ref_counts.items())],
         "bucket int, cb long",
     )

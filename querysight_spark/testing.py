@@ -14,6 +14,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
+from querysight_spark.sources.dbt_catalog import local_frame
+
 
 def make_clustered_embeddings(
     spark: SparkSession,
@@ -36,4 +38,4 @@ def make_clustered_embeddings(
     X = centers[assign] + sigma * rng.randn(n, dim)
     X /= np.linalg.norm(X, axis=1, keepdims=True)
     rows = [(int(i), [float(x) for x in X[i]]) for i in range(n)]
-    return spark.createDataFrame(rows, "vec_id int, embedding array<float>")
+    return local_frame(spark, rows, "vec_id int, embedding array<float>")

@@ -126,7 +126,27 @@ SLOW_TESTS = frozenset({
 })
 
 
+def missing_slow_tests(collected: set[str], whole_files: set[str]) -> list[str]:
+    """SLOW_TESTS entries naming a test that is absent from a file whose
+    tests were all collected: a renamed or reparametrized test would
+    otherwise drop out of the skip list without anyone noticing."""
+    return sorted(
+        e for e in SLOW_TESTS if e.split("::")[0] in whole_files and e not in collected
+    )
+
+
+# tryfirst: see every collected item before -k/-m deselection drops some
+@pytest.hookimpl(tryfirst=True)
 def pytest_collection_modifyitems(config, items):
+    collected = {f"{item.fspath.basename}::{item.name}" for item in items}
+    # a file named with a node id (file.py::test) is only partly collected
+    partial = {os.path.basename(a.split("::")[0]) for a in config.args if "::" in a}
+    whole_files = {item.fspath.basename for item in items} - partial
+    missing = missing_slow_tests(collected, whole_files)
+    if missing:
+        raise pytest.UsageError(
+            f"SLOW_TESTS in tests/conftest.py names tests that do not exist: {missing}"
+        )
     if os.environ.get("QS_FULL_TESTS"):
         return
     skip = pytest.mark.skip(

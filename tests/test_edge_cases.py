@@ -90,3 +90,25 @@ def test_single_word_doc_shingles(spark):
     docs = spark.createDataFrame([(1, "word"), (2, "")], "doc_id long, text string")
     # docs shorter than the shingle size yield no signature rows, not errors
     assert minhash_signatures(docs, shingle_size=3).count() == 0
+
+def test_dd06_on_corpus_without_vec_id_zero(spark, tmp_path):
+    """dd06 reads the vector length from any row, not from vec_id 0."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from querysight_spark.extension_queries import dd06
+
+    rng = np.random.RandomState(3)
+    ids = np.arange(1, 31)
+    vecs = rng.randn(len(ids), 16).astype(np.float32)
+    pq.write_table(
+        pa.table({
+            "vec_id": pa.array(ids, type=pa.int64()),
+            "embedding": pa.array([list(v) for v in vecs], type=pa.list_(pa.float32())),
+        }),
+        str(tmp_path / "embeddings.parquet"),
+    )
+    # vec 25 is the only id the fixture's augmentation copies (as 100025)
+    got = {(r.vec_a, r.vec_b) for r in dd06(spark, str(tmp_path)).collect()}
+    assert got == {(25, 100025)}
